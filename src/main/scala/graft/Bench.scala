@@ -28,9 +28,9 @@ import org.apache.spark.sql.SparkSession
   *    passes — the signature of machine contention, vs a genuine
   *    regression which moves specific queries in ALL passes including
   *    clean ones — is readable from the artifact alone;
-  *  - `load`: /proc loadavg + JVM cpu count sampled before and after the
-  *    run; a loadavg far above the benchmark's own parallelism at start
-  *    means something else was running.
+  *  - `load`: co-tenant CPU, loadavg and GC ms at the start and at every
+  *    pass boundary, the `contended` label, and the session's shape
+  *    (JVM cpus, Spark master, shuffle partitions, AQE).
   * Stdout is TWO lines: the compact driver-contract summary first (totals,
   * per-query hot seconds, failed list, load stamps), then the bulky
   * per-pass diagnostic arrays — the driver's stdout capture has twice
@@ -43,52 +43,21 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     def loadAvg: Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
-    // Contention guard (VERDICT r8: a load-9.3 artifact cost a round a clean
-    // cross-round comparison): numbers from a loaded machine are upper
-    // bounds, not measurements — flag it loudly in stderr AND the JSON so a
-    // contended run is never shipped as the round artifact unlabeled.
-    // Threshold cores/8 (was cores/4): round 13 shipped a load-7.12 run on
-    // 32 cores as `contended:false` and every per-query time carried a
-    // uniform ~1.35× inflation — cores/4 lets a third of the machine be
-    // busy before flagging, which is far past where sub-second queries
-    // start absorbing scheduler noise.
-    // r16 (VERDICT r15 #6): don't just LABEL contention — WAIT it out.
-    // Three driver rounds in a row shipped contended artifacts because the
-    // driver schedules Bench next to other work; a bounded spin (up to
-    // 10 min, re-checked each minute) lets the co-tenant drain so the
-    // shipped artifact is a measurement, not an upper bound. Backstopped:
-    // after the budget we run anyway, labeled contended as before.
-    val threshold = Runtime.getRuntime.availableProcessors / 8.0
-    var waited = 0
-    // SPARK_GRAFT_NO_WAIT=1 skips the drain (local tooling only — the
-    // driver never sets it; a deliberately-contended local run still gets
-    // the contended:true label below).
-    if (sys.env.contains("SPARK_GRAFT_NO_WAIT")) waited = 10
-    while (loadAvg > threshold && waited < 10) {
-      System.err.println(f"[bench] start load $loadAvg%.1f > $threshold%.1f — " +
-        f"waiting 60 s for the machine to drain (${waited + 1}/10)")
-      Thread.sleep(60000)
-      waited += 1
-    }
-    val loadStart = loadAvg
-    // Per-pass contention stamps (r17, VERDICT r16 #2): `contended` must
-    // cover the WHOLE run, not just its start — r16 shipped loadEnd 4.15
-    // > 4.0 as contended:false because only the start was checked. But a
-    // mid-run loadavg alone can't gate: it includes the bench's OWN 32
-    // worker threads, so any boundary after a busy pass would read high
-    // on a perfectly clean machine. Each boundary therefore samples
-    // /proc/stat total-CPU MINUS /proc/self/stat process-CPU over 2 s —
-    // co-tenant cores, the signal loadavg conflates away — alongside the
-    // raw loadavg (kept in the artifact for D-state/I/O co-tenants that
-    // burn no CPU, which the others-CPU probe can't see). The flag trips
-    // if the start load exceeded the threshold after the drain wait, or
-    // if ANY boundary shows co-tenant CPU above it.
+    // Contention signal: co-tenant CPU, i.e. /proc/stat total-CPU MINUS
+    // /proc/self/stat process-CPU over 2 s, sampled at the start and at
+    // every pass boundary. loadavg cannot gate: it counts the bench's own
+    // worker threads and lingers for minutes after a build, so it is only
+    // recorded in the stamps (for D-state/I/O co-tenants that burn no CPU).
+    // Numbers from a contended machine are upper bounds, not measurements,
+    // so the start waits (up to 10 min, re-checked each minute) for the
+    // co-tenant to drain, and the run is labelled `contended` if any stamp
+    // shows co-tenant CPU above cores/8.
     // (machine busy jiffies, this process's busy jiffies). /proc/stat cpu
     // line: user nice system idle iowait irq softirq steal guest
     // guest_nice — busy excludes idle (3), iowait (4) AND guest/guest_nice
     // (8/9): the kernel folds guest time into user/nice already, so
     // counting fields 8/9 double-counts co-tenant CPU on virtualized
-    // hosts and can trip contended:true falsely (r18, ADVICE).
+    // hosts and can trip contended:true falsely.
     // /proc/self/stat utime(14)+stime(15) are process-wide across
     // threads; fields are located AFTER the ')' that closes the comm
     // field, which may itself contain spaces. USER_HZ is 100 on Linux.
@@ -110,36 +79,37 @@ object Bench {
       val (b1, s1) = jiffies()
       ((b1 - b0) - (s1 - s0)).max(0L) / 100.0 / 2.0
     }
+    val threshold = Runtime.getRuntime.availableProcessors / 8.0
+    var othersStart = othersCores()
+    // SPARK_GRAFT_NO_WAIT=1 skips the drain (local tooling only; a
+    // deliberately-contended run still gets the contended:true label).
+    var waited = if (sys.env.contains("SPARK_GRAFT_NO_WAIT")) 10 else 0
+    while (othersStart > threshold && waited < 10) {
+      System.err.println(f"[bench] co-tenant CPU $othersStart%.2f cores > $threshold%.2f — " +
+        f"waiting 60 s for the machine to drain (${waited + 1}/10)")
+      Thread.sleep(60000)
+      waited += 1
+      othersStart = othersCores()
+    }
     // Cumulative JVM GC milliseconds: a pass whose queries slow down with
     // low co-tenant CPU but a big GC delta is stalling on ITS OWN heap
-    // (GC threads are self-CPU, so others_cpu can't see them) — the other
-    // candidate for the r16 window-shaped nocache anomaly.
+    // (GC threads are self-CPU, so others_cpu can't see them).
     def gcMs: Long = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
         .asScala.map(_.getCollectionTime.max(0L)).sum
     }
+    val loadStart = loadAvg
     val loadStamps = scala.collection.mutable.ArrayBuffer(
-      ("start", loadStart, 0.0, gcMs))
+      ("start", loadStart, othersStart, gcMs))
     def stamp(label: String): Unit =
       loadStamps += ((label, loadAvg, othersCores(), gcMs))
-    def contendedNow =
-      loadStart > threshold || loadStamps.exists(_._3 > threshold)
-    if (loadStart > threshold) System.err.println(
-      f"[bench] WARNING: start load $loadStart%.1f exceeds cores/8 after " +
-        "a 10-min drain wait — re-run on an idle machine before treating " +
+    def contendedNow = loadStamps.exists(_._3 > threshold)
+    if (othersStart > threshold) System.err.println(
+      f"[bench] WARNING: co-tenant CPU $othersStart%.2f cores exceeds cores/8 " +
+        "after a 10-min drain wait — re-run on an idle machine before treating " +
         "this artifact as a measurement")
-    // Latency profile on top of the engine defaults: at bench SF every
-    // shuffle is <10 MB, so AQE's per-stage re-planning jobs cost more than
-    // they save (engine default keeps AQE on for the 100 TB posture —
-    // coalescing and skew-splitting pay for themselves when stages move GBs).
-    // SPARK_GRAFT_CONF still overrides both.
-    // 8 post-shuffle partitions ≈ data/cores-proportional at bench SF (the
-    // whole sf0.1 dataset is ~100 MB; 32 would mean sub-MB tasks whose
-    // scheduling dominates). Scales with SF via SPARK_GRAFT_CONF.
-    val spark = Engine.session(
-      "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.shuffle.partitions" -> "8")
+    val spark = Engine.session(Engine.benchProfile: _*)
 
     // Per-query JVM meters (r17): cumulative GC ms and JIT-compilation ms
     // deltas around each query, emitted as diag arrays. Three idle-machine
@@ -301,7 +271,7 @@ object Bench {
     val loadEnd = loadStamps.last._2
     val contended = contendedNow
     if (contended) System.err.println(
-      "[bench] WARNING: co-tenant CPU at a pass boundary (or start load) " +
+      "[bench] WARNING: co-tenant CPU at the start or a pass boundary " +
         "exceeded the threshold — " +
         loadStamps.map { case (l, v, o, g) =>
           f"$l=$v%.2f/others=$o%.2f/gc=${g}ms" }.mkString(", "))
@@ -321,7 +291,10 @@ object Bench {
       .mkString("{", ",", "}")
     val loadJson = f"""{"start":$loadStart%.2f,"end":$loadEnd%.2f,""" +
       s""""passes":$stampsJson,""" +
-      s""""cpus":${Runtime.getRuntime.availableProcessors},"contended":$contended}"""
+      s""""cpus":${Runtime.getRuntime.availableProcessors},""" +
+      s""""master":"${spark.sparkContext.master}",""" +
+      s""""shuffle_partitions":${spark.conf.get("spark.sql.shuffle.partitions")},""" +
+      s""""aqe":${spark.conf.get("spark.sql.adaptive.enabled")},"contended":$contended}"""
     val summary = s"""{"metric":"total","value":${s4(tot(hot))},"unit":"sec","queries":$qs,""" +
       s""""total_nocache":${s4(tot(nocache))},"total_cold":${s4(tot(cold))},""" +
       s""""failed":$failedJson,"sf":"$sfDir","load":$loadJson}"""

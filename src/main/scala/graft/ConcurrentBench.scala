@@ -22,9 +22,7 @@ object ConcurrentBench {
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val clients = sys.env.getOrElse("SPARK_GRAFT_CLIENTS", "8").toInt
     val spark = Engine.session(
-      "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.shuffle.partitions" -> "8",
-      "spark.scheduler.mode" -> "FAIR")
+      Engine.benchProfile :+ ("spark.scheduler.mode" -> "FAIR"): _*)
     spark.conf.set("spark.graft.tableCache", "memory")
 
     val names = SparkEntry.queries.keys.toSeq.sorted

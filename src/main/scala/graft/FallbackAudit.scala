@@ -1,18 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Audit for SILENT whole-stage-codegen fallbacks (r18): a stage whose
+/** Meter for SILENT whole-stage-codegen fallbacks: a stage whose
   * generated method exceeds spark.sql.codegen.hugeMethodLimit reverts to
   * expression-tree interpretation with only an INFO log — a 50–100×
   * per-row tax invisible at WARN (the x94 finding).
   *
-  * [[attach]] is the reusable meter (r19): it raises the codegen logger
-  * to INFO, installs a counting appender, and returns (setCurrent,
-  * counts) so any harness — the one-shot [[main]] below, or Bench's
-  * per-key artifact meter — can attribute fallback events to the query
-  * that was running. The one-shot main runs every SparkEntry query once
-  * and reports which keys trip it.
-  * Usage: runMain graft.FallbackAudit [sfDir] */
+  * [[attach]] raises the codegen logger to INFO, installs a counting
+  * appender, and returns (setCurrent, counts) so a harness can attribute
+  * fallback events to the query that was running. Bench runs it over the
+  * full suite and writes the per-key counts as the artifact's
+  * `fallbacks` map. */
 object FallbackAudit {
 
   /** Install the INFO-level fallback counter. Returns the (label setter,
@@ -47,28 +44,5 @@ object FallbackAudit {
     ctx.updateLoggers()
     (label => appender.current = label,
       () => counts.synchronized { counts.toMap })
-  }
-
-  def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[16]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val (setCurrent, counts) = attach()
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      setCurrent(name)
-      try fn(spark, dir).write.mode("overwrite").format("noop").save()
-      catch { case e: Exception =>
-        System.err.println(s"[audit] $name failed: ${e.getMessage.take(100)}")
-      }
-    }
-    val cs = counts()
-    cs.toSeq.sortBy(-_._2).foreach { case (k, n) => println(s"FALLBACK $k x$n") }
-    if (cs.isEmpty) println("FALLBACK none")
-    spark.stop()
   }
 }

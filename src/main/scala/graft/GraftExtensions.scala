@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import graft.functions.{FloatDot, FloatPrefixDots, H60, H60Array, MinHashSigs, SimHash64}
 
 /** SparkSessionExtensions entry point (SURVEY §4's reserved extension seam):
@@ -16,55 +17,49 @@ import graft.functions.{FloatDot, FloatPrefixDots, H60, H60Array, MinHashSigs, S
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(graft.plans.PresentationSortRule.apply)
-    ext.injectFunction((
-      FunctionIdentifier("float_dot"),
-      new ExpressionInfo(classOf[FloatDot].getName, "float_dot",
-        "float_dot(a, b) - double-precision dot product of two float arrays"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        FloatDot(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("float_prefix_dots"),
-      new ExpressionInfo(classOf[FloatPrefixDots].getName, "float_prefix_dots",
-        "float_prefix_dots(a, b, b1, b2, ...) - prefix dot products of two " +
-          "float arrays at ascending literal boundaries, one pass"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        val bounds = children.drop(2).map {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v, _) => v.toString.toInt
-          case other => throw new IllegalArgumentException(
-            s"float_prefix_dots: bounds must be literals, got $other")
-        }
-        FloatPrefixDots(children(0), children(1), bounds)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64",
-        "simhash64(hashes) - 64-bit SimHash of an array<long> of token hashes"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SimHash64(children(0))))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sigs"),
-      new ExpressionInfo(classOf[MinHashSigs].getName, "minhash_sigs",
-        "minhash_sigs(shingles, n) - n MinHash signature values of an array<string>"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        val n = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v, _) => v.toString.toInt
-          case other => throw new IllegalArgumentException(
-            s"minhash_sigs: numHashes must be a literal, got $other")
-        }
-        MinHashSigs(children(0), n)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("h60"),
-      new ExpressionInfo(classOf[H60].getName, "h60",
-        "h60(s) - 60-bit engine-parity content hash (top bits of md5), " +
-          "DuckDB twin: CAST(('0x' || substring(md5(s), 1, 15)) AS BIGINT)"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        H60(children(0))))
-    ext.injectFunction((
-      FunctionIdentifier("h60_array"),
-      new ExpressionInfo(classOf[H60Array].getName, "h60_array",
-        "h60_array(arr) - element-wise h60 over an array<string>"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        H60Array(children(0))))
+    GraftExtensions.functions.foreach(ext.injectFunction)
   }
+}
+
+object GraftExtensions {
+  private def fn(name: String, cls: Class[_], usage: String)(
+      build: Seq[Expression] => Expression): SparkSessionExtensions#FunctionDescription =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name, usage), build)
+
+  /** An argument that must be a non-NULL integral literal within Int range;
+    * anything else (NULL, `8.5`, `'8x'`, a column) fails with a message
+    * naming the function and the argument. */
+  private def intLiteral(function: String, arg: String, e: Expression): Int = e match {
+    case Literal(v: Int, IntegerType) => v
+    case Literal(v: Short, ShortType) => v.toInt
+    case Literal(v: Byte, ByteType) => v.toInt
+    case Literal(v: Long, LongType) if v.isValidInt => v.toInt
+    case other => throw new IllegalArgumentException(
+      s"$function: $arg must be an integer literal, got $other")
+  }
+
+  /** The SQL functions [[GraftExtensions]] injects, one list so every
+    * registration site uses the same builders. */
+  val functions: Seq[SparkSessionExtensions#FunctionDescription] = Seq(
+    fn("float_dot", classOf[FloatDot],
+      "float_dot(a, b) - double-precision dot product of two float arrays")(
+      es => FloatDot(es(0), es(1))),
+    fn("float_prefix_dots", classOf[FloatPrefixDots],
+      "float_prefix_dots(a, b, b1, b2, ...) - prefix dot products of two " +
+        "float arrays at ascending literal boundaries, one pass")(
+      es => FloatPrefixDots(es(0), es(1),
+        es.drop(2).map(intLiteral("float_prefix_dots", "bounds", _)))),
+    fn("simhash64", classOf[SimHash64],
+      "simhash64(hashes) - 64-bit SimHash of an array<long> of token hashes")(
+      es => SimHash64(es(0))),
+    fn("minhash_sigs", classOf[MinHashSigs],
+      "minhash_sigs(shingles, n) - n MinHash signature values of an array<string>")(
+      es => MinHashSigs(es(0), intLiteral("minhash_sigs", "numHashes", es(1)))),
+    fn("h60", classOf[H60],
+      "h60(s) - 60-bit engine-parity content hash (top bits of md5), " +
+        "DuckDB twin: CAST(('0x' || substring(md5(s), 1, 15)) AS BIGINT)")(
+      es => H60(es(0))),
+    fn("h60_array", classOf[H60Array],
+      "h60_array(arr) - element-wise h60 over an array<string>")(
+      es => H60Array(es(0))))
 }

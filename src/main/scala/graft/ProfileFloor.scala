@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Floor profiler: splits each query's warm wall-clock into
   * build+analyze / optimize+plan / execute phases, to locate the fixed
   * per-query overhead that dominates the bench tail at small SF.
@@ -14,9 +12,7 @@ object ProfileFloor {
     val which = args.headOption.getOrElse("all")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
-    val spark = Engine.session(
-      "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.shuffle.partitions" -> "8")
+    val spark = Engine.session(Engine.benchProfile: _*)
 
     val names =
       if (which == "all") SparkEntry.queries.keys.toSeq.sorted

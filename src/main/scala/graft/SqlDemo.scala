@@ -1,21 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** End-to-end drive of the SparkSessionExtensions wiring: a session built
-  * withExtensions(GraftExtensions) runs pure-SQL text using the engine's
+/** End-to-end drive of the SparkSessionExtensions wiring: the engine
+  * session (built withExtensions(GraftExtensions)) runs pure-SQL text using the engine's
   * registered functions. Usage: runMain graft.SqlDemo [sfDir] */
 object SqlDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
     spark.read.parquet(s"$sfDir/embeddings.parquet").createOrReplaceTempView("embeddings")
     spark.read.parquet(s"$sfDir/documents.parquet").createOrReplaceTempView("documents")
     println("[sql-demo] cosine top-5 via float_dot in SQL:")

@@ -247,7 +247,7 @@ object Tables {
   def pinCorpus(df: DataFrame): DataFrame =
     if (df.sparkSession.conf.getOption("spark.graft.pin.storage").contains("disk")) {
       val p = df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      p.foreach(_ => ()) // materialize every column of every partition now
+      p.count() // fills the whole cache (every column) without building external Rows
       pinnedDisk.add(p)
       p
     } else df.localCheckpoint(true)

@@ -211,9 +211,10 @@ object AdvancedQueries {
     * small scan split, and the within-cluster join output is quadratic in
     * cluster size — without the fan-out the (broadcast-eligible) join runs
     * every pair on that single split's ONE task (measured: 37 s for x26 at
-    * sf1; ~3 s spread — SemProbe). At 100 TB the scan has real splits and
-    * the join is a co-partitioned exchange, but compute-proportional
-    * fan-out of a compact input is exactly what spread is for. */
+    * sf1; ~3 s spread — BASELINE.md §sf1 scale validation). At 100 TB the
+    * scan has real splits and the join is a co-partitioned exchange, but
+    * compute-proportional fan-out of a compact input is exactly what
+    * spread is for. */
   private def assignedCorpus(s: SparkSession, d: String): DataFrame =
     assignedCorpusWith(s, d, Quantizers.trainedCents(s, d))
 
@@ -927,10 +928,10 @@ object AdvancedQueries {
     *
     * Contract: honest FAISS refine semantics, NOT exact-serving like x28.
     * The exact contract is unreachable from a 4-bit-code shortlist on this
-    * corpus — measured (RefineProbe, sf0.001): the worst true-top-3 hit
-    * sits at ADC rank 155 of ~190 probed candidates, so a recall-1.0
-    * shortlist would be the whole probe set and the codes tier would prune
-    * nothing. What refine DOES guarantee: sims on the shortlist are exact
+    * corpus — measured at sf0.001 (BASELINE.md §Findings of the removed
+    * probe mains): the worst true-top-3 hit sits at ADC rank 155 of ~190
+    * probed candidates, so a recall-1.0 shortlist would be the whole
+    * probe set and the codes tier would prune nothing. What refine DOES guarantee: sims on the shortlist are exact
     * (score error of pure ADC serving is eliminated), and recall@3 is
     * lifted over ADC-only ranking at the same candidate budget (asserted
     * in the spec). The oracle is its OWN generated twin ([[refineOracle]])
@@ -1001,36 +1002,6 @@ object AdvancedQueries {
       .agg(shortTopK(col("acos"), col("vec_id")).as("short")) // approx-cos desc, tie → low vec_id
       .select(col("q_id"), posexplode(col("short._2")))
       .select(col("q_id"), col("col").as("vec_id"), (col("pos") + 1).cast("long").as("srn"))
-  }
-
-  /** Diagnostic surface (RefineProbe): full ADC ranking (q_id, vec_id,
-    * rank) over the probed candidates, no shortlist cutoff. */
-  private[graft] def refineAdcRanks(s: SparkSession, d: String): DataFrame = {
-    val ix = ivfIndex(s, d)
-    import s.implicits._
-    def ddot(qv: Array[Float], c: Array[Double]): Double =
-      qv.zip(c).foldLeft(0.0) { case (a, (x, y)) => a + x.toDouble * y }
-    val probePairs = ix.queryRows.toSeq.flatMap { case (qid, qe, _) =>
-      val qv = qe.toArray
-      ix.cents.map { case (cid, c) => (cid, ddot(qv, c)) }
-        .sortBy { case (cid, sc) => (-sc, cid) }.take(nprobe)
-        .map { case (cid, _) => (qid, cid) }
-    }
-    val lutByQ = ix.queryRows.map { case (qid, qe, _) =>
-      qid -> VectorQueries.pqDotLut(qe.toArray, ix.cbs).flatten.toSeq
-    }.toMap
-    val probes = probePairs.map { case (qid, cid) => (qid, cid, lutByQ(qid)) }
-      .toDF("q_id", "cid", "lut")
-    val codes = ix.codesServing
-    val adot = (0 until VectorQueries.pqM)
-      .map(i => element_at(col("lut"), (lit(i * VectorQueries.pqK) + col(s"c$i") + 1).cast("int")))
-      .reduce(_ + _)
-    codes.join(broadcast(probes), Seq("cid"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), (adot / col("nrm")).as("acos"), col("vec_id"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(desc("acos"), col("vec_id"))).cast("long"))
-      .select(col("q_id"), col("vec_id"), col("rank"))
   }
 
   val x85: Q = (s, d) => {

@@ -74,8 +74,8 @@ object TemporalQueries {
 
   /** x35 — q34's batch fast path: repartition by user, sort within
     * partitions, one linear typed pass per partition. Value-identical to
-    * q34 (same oracle) and measured −30% (SessionProbe, BASELINE.md §q34):
-    * the hand-rolled merge adds ~zero CPU on top of the exchange+sort
+    * q34 (same oracle) and measured −30% (BASELINE.md §q34 session-window
+    * attribution): the hand-rolled merge adds ~zero CPU on top of the exchange+sort
     * floor, where `session_window`'s generic merge machinery adds
     * ~0.15 s. mapPartitions is deliberate here — sessionization is a
     * per-key linear scan, exactly the "genuine per-partition imperative

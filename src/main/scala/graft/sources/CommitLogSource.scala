@@ -104,8 +104,14 @@ case class CommitLogOffset(pos: Int) extends Offset {
 class CommitLogMicroBatchStream(path: String, fields: Array[String])
     extends MicroBatchStream {
   import graft.streaming.Maintenance
-  override def latestOffset(): Offset =
-    CommitLogOffset(Maintenance.commits(path).length)
+  // Offsets never move backwards: a poll racing a writer that rewrites the
+  // log can read fewer lines than an earlier poll, and a regressed end
+  // offset would make the next batch re-emit lines already delivered.
+  @volatile private var latest = 0
+  override def latestOffset(): Offset = {
+    latest = math.max(latest, Maintenance.commits(path).length)
+    CommitLogOffset(latest)
+  }
   override def initialOffset(): Offset = CommitLogOffset(0)
   override def deserializeOffset(json: String): Offset =
     CommitLogOffset(json.trim.toInt)

@@ -258,7 +258,7 @@ object IngestJob {
       .write.mode("overwrite").partitionBy("p_date")
       // D2 flush-threshold analog (redpanda.yaml:31-32 caps Parquet
       // file size by bytes; Spark's file sink caps by records)
-      .option("maxRecordsPerFile", sys.env.getOrElse("GRAFT_MAX_RECORDS_PER_FILE", "1000000"))
+      .option("maxRecordsPerFile", 1000000L)
       // batch=<id> directory = the snapshot boundary: time-travel
       // reads prune on it (Iceberg's VERSION AS OF equivalent)
       .parquet(s"$tableDir/data/batch=$batchId")

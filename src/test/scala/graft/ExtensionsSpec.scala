@@ -67,20 +67,17 @@ class ExtensionsSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.pin.storage")
   }
 
-  test("float_dot / simhash64 / minhash_sigs callable from spark.sql") {
-    // same builders GraftExtensions injects, registered on the shared session
+  /** Registers GraftExtensions' SQL functions on the shared session: the
+    * same builders `withExtensions(new GraftExtensions)` injects. */
+  private def registerGraftFunctions(): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("float_dot",
-      es => graft.functions.FloatDot(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("simhash64",
-      es => graft.functions.SimHash64(es(0)), "built-in")
-    reg.createOrReplaceTempFunction("minhash_sigs", es => {
-      val n = es(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v, _) => v.toString.toInt
-        case other => throw new IllegalArgumentException(s"numHashes must be literal: $other")
-      }
-      graft.functions.MinHashSigs(es(0), n)
-    }, "built-in")
+    GraftExtensions.functions.foreach { case (id, info, build) =>
+      reg.registerFunction(id, info, build)
+    }
+  }
+
+  test("float_dot / simhash64 / minhash_sigs callable from spark.sql") {
+    registerGraftFunctions()
     val dot = spark.sql(
       "SELECT float_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d")
       .head().getDouble(0)
@@ -97,12 +94,22 @@ class ExtensionsSpec extends SparkSpec {
     assert(sigs == viaCol)
   }
 
+  Seq("NULL", "8.5", "'8x'").foreach { bad =>
+    test(s"integer-literal SQL arguments: $bad fails with a clear IllegalArgumentException") {
+      registerGraftFunctions()
+      Seq(s"SELECT minhash_sigs(array('a b'), $bad)",
+        "SELECT float_prefix_dots(array(CAST(1.0 AS FLOAT)), " +
+          s"array(CAST(1.0 AS FLOAT)), $bad)").foreach { q =>
+        val e = intercept[Exception](spark.sql(q).collect())
+        val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+        assert(chain.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+          c.getMessage != null && c.getMessage.contains("must be an integer literal")), s"$q: $e")
+      }
+    }
+  }
+
   test("h60 / h60_array callable from spark.sql, match the documented formulation") {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("h60",
-      es => graft.functions.H60(es(0)), "built-in")
-    reg.createOrReplaceTempFunction("h60_array",
-      es => graft.functions.H60Array(es(0)), "built-in")
+    registerGraftFunctions()
     val r = spark.sql(
       """SELECT h60('hello') AS a,
         |  CAST(conv(substring(md5(CAST('hello' AS BINARY)), 1, 15), 16, 10) AS BIGINT) AS b,

@@ -51,9 +51,10 @@ ATTRIBUTED_GROWTH = {
 }
 
 # Keys whose HIGH-and-FLAT per-row cost is attributed per-BYTE or per-FLOP
-# work in COMPILED pipelines (r20 sf10 gate: the fallbacks meter read 0 for
-# the whole suite, so none of these is silent interpretation; per-row cost
-# tracks text bytes / vector flops, which the rows denominator can't see).
+# work in COMPILED pipelines (per-row cost tracks text bytes / vector flops,
+# which the rows denominator can't see). An entry only holds while the big
+# artifact's `fallbacks` meter reads 0 for the key: a logged codegen
+# fallback, or an artifact without the meter, leaves the flag INTERP?.
 ATTRIBUTED_COST = {
     "x36_normalize": "canon chain is per-BYTE regex+md5 over ~KB docs; compiled (fallbacks=0), wall_x ~ rows_x",
     "x128_dup_weights": "per-BYTE md5+tokenize+set-jaccard; compiled, wall grew SLOWER than rows (74.9x vs 103.5x)",
@@ -73,6 +74,12 @@ def load(path):
             if "queries" in d:
                 return d
     raise SystemExit(f"{path}: no bench JSON line with a 'queries' map")
+
+
+def compiled(art, key):
+    """True when the artifact's fallbacks meter ran and counted none for key."""
+    fallbacks = art.get("fallbacks")
+    return isinstance(fallbacks, dict) and fallbacks.get(key, 0) == 0
 
 
 def main():
@@ -96,7 +103,7 @@ def main():
         rows_x = rb / rs
         flag = ""
         if rows_x >= 10 and cb > cost_floor and 0.5 <= cb / cs <= 2.0:
-            if k in ATTRIBUTED_COST:
+            if k in ATTRIBUTED_COST and compiled(big, k):
                 flag = f"cost-attributed: {ATTRIBUTED_COST[k]}"
             else:
                 flag = "INTERP?"
